@@ -34,10 +34,12 @@ class PipelineConfig:
             parallelism hint for the micro-batch run.
         idle_time: seconds without any *data-carrying* batch before the
             pipeline shuts itself down (reference idle timer,
-            async_data_pipeline.go:243, :313, :334-337). The reference's
-            timer resets even on nil batches; the engine deliberately
-            counts only ``numInputRows > 0`` progress (documented
-            deviation, SURVEY.md §7).
+            async_data_pipeline.go:243, :313, :334-337). The window runs
+            only while no batch is in flight, so a slow batch (its
+            ``createDataFrame`` or a long micro-batch) is never idle
+            time; it restarts when a data-carrying batch leaves flight.
+            The reference's timer resets even on nil batches; the engine
+            does not (documented deviation, SURVEY.md §7).
         collect_timeout: seconds the source may stall before the run is
             aborted with a timeout CollectError (reference documents this
             as a collect timeout but implements a *send* timeout,

@@ -72,9 +72,9 @@ class MetricsHub:
 
     Mirrors the reference's locking discipline (``metricsMu``,
     async_data_pipeline.go:78) and its 1s-default ticker subscription loop
-    (:103-136). In streaming mode the hub is fed by a
-    ``StreamingQueryListener`` instead of inline counter updates — same
-    external contract.
+    (:103-136). In streaming mode the hub is fed the same way, inline, by
+    ``StreamingPipeline``'s foreachBatch wrapper from its own row count;
+    a ``StreamingQueryListener`` feed is ROADMAP.md direction 4.
     """
 
     DEFAULT_INTERVAL = 1.0
@@ -209,7 +209,7 @@ def attach_observation(df, aggs: dict, name: str):
 def observe_batch(df, hub: "MetricsHub", name: str = "batch", **aggs):
     """Attach free row-count metrics to a BATCH DataFrame via
     ``df.observe`` and feed them into ``hub`` — the batch-side analogue
-    of the streaming ``StreamingQueryListener`` feed (same
+    of ``StreamingPipeline``'s per-micro-batch observation (same
     ``MetricsHub`` contract as the reference's ``ExportMetrics``,
     async_data_pipeline.go:157-168).
 

@@ -15,11 +15,20 @@ Two engine modes:
   the *work* is still distributed across executors — only the batch
   hand-off is driver-side, exactly like the reference's channel.
 - :class:`StreamingPipeline` — the Structured-Streaming-native form:
-  ``readStream → foreachBatch(process)`` with a
-  ``StreamingQueryListener`` metrics bridge and an idle watchdog that
-  stops the query. This is the shape that scales to a real cluster: the
-  micro-batch engine replaces the channel, checkpointing replaces
-  at-most-once, and executors replace the single consumer thread.
+  ``readStream → foreachBatch(process)``, whose wrapper counts each
+  micro-batch's rows into the :class:`MetricsHub`, and an idle watchdog
+  that stops the query. (No ``StreamingQueryListener`` is registered; a
+  listener feed is ROADMAP.md direction 4.) This is the shape that scales
+  to a real cluster: the micro-batch engine replaces the channel,
+  checkpointing replaces at-most-once, and executors replace the single
+  consumer thread.
+
+Both runtimes keep one idle rule: the idle window runs only while no
+batch is in flight, and restarts when a data-carrying batch leaves flight.
+In :class:`Pipeline` a batch is in flight from the moment ``collect()``
+returns it until the processor receives it, so a slow ``createDataFrame``
+is never idle time; in :class:`StreamingPipeline` a micro-batch is in
+flight for its whole ``foreachBatch`` call.
 
 Documented deviations from the reference (SURVEY.md §2 quirks, §7):
 
@@ -41,13 +50,7 @@ import threading
 import time
 from typing import Any, Callable, Iterable
 
-# Imported eagerly: a lazy in-function import costs ~0.3-0.5s cold on the
-# collector thread, during which a sub-second idle_time can fire and drop
-# the first batch (the never-drop guarantee would be violated by an import).
-try:
-    import pandas as _pd
-except ImportError:  # pragma: no cover
-    _pd = None
+import pandas as pd
 
 from asyncdatapipeline_spark.config import PipelineConfig
 from asyncdatapipeline_spark.errors import (
@@ -75,8 +78,6 @@ class CloseReason(enum.Enum):
 # DataFrame, or None ("no new data", reference async_data_pipeline.go:66).
 CollectFunc = Callable[["Pipeline"], Any]
 ProcessFunc = Callable[["Pipeline", Any], None]
-
-_SENTINEL = object()
 
 
 class Pipeline:
@@ -108,13 +109,6 @@ class Pipeline:
         self._reason_lock = threading.Lock()
         self._errors: list[BaseException] = []
         self._errors_lock = threading.Lock()
-        # Monotonic timestamp of the most recent collect() that returned
-        # data, published BEFORE batch normalization (createDataFrame /
-        # checkpoint setup) so the processor's idle clock resets at
-        # collect-return, not at queue-put. Without this, a slow
-        # normalization plus a sub-second idle_time silently drops the
-        # in-flight batch. Float store/load is GIL-atomic; no lock needed.
-        self._data_pending_ts = 0.0
 
     # -- cancellation (reference ctx/cancel, :233) -----------------------
     def cancel(self) -> None:
@@ -148,7 +142,7 @@ class Pipeline:
         first action (process's, usually) materializes it once and the
         processor's deferred count reads the checkpointed blocks.
         """
-        if _pd is not None and isinstance(data, _pd.DataFrame):
+        if isinstance(data, pd.DataFrame):
             n = len(data)
             if self._spark is not None:
                 return self._spark.createDataFrame(data, schema=self._schema), n
@@ -182,11 +176,24 @@ class Pipeline:
                     self._cancel.set()
             threading.Thread(target=deadline_watch, daemon=True, name="deadline").start()
 
+        # The idle rule (module docstring): batches in flight = ``taken``
+        # - ``received``. Only the collector writes ``taken``, only the
+        # processor ``received``.
+        taken = 0
+
         def collector() -> None:
             # reference collector goroutine, :247-291
+            nonlocal taken
             while not self._cancel.is_set():
                 try:
                     data = self._collect(self)
+                    if data is None:
+                        # "no new data" — deviation: not delivered, never
+                        # in flight (documented-intent semantics).
+                        time.sleep(0.01)
+                        continue
+                    taken += 1  # in flight from here, before normalization
+                    batch = self._to_batch(data)
                 except StopPipeline:
                     # reference ErrNeedCancel path, :258-261
                     self._set_reason(CloseReason.COLLECT_CANCEL)
@@ -196,13 +203,6 @@ class Pipeline:
                     self._append_error(CollectError(str(exc), cause=exc))
                     self._cancel.set()  # deviation: clean stop, no secondary timeout
                     return
-                if data is None:
-                    # "no new data" — deviation: not delivered, does not
-                    # reset the idle clock (documented-intent semantics).
-                    time.sleep(0.01)
-                    continue
-                self._data_pending_ts = time.monotonic()
-                batch = self._to_batch(data)
                 # bounded send with backpressure timeout (reference
                 # 3-way select, :267-288)
                 sent_deadline = time.monotonic() + self.config.collect_timeout
@@ -224,35 +224,22 @@ class Pipeline:
 
         def processor() -> None:
             # reference processor goroutine, :293-340
+            received = 0
             last_data = time.monotonic()
             while True:
-                # Idle clock resets at collect-return (data pending) as
-                # well as at batch arrival, so normalization latency on
-                # the collector thread can never be charged as idleness.
-                last_signal = max(last_data, self._data_pending_ts)
-                idle_left = self.config.idle_time - (time.monotonic() - last_signal)
-                if idle_left <= 0:
-                    # Idle window elapsed — but "idle" means NO DATA, so
-                    # drain anything already buffered first. (In the
-                    # reference this is a select race: with both the
-                    # timer and the channel ready, Go picks randomly,
-                    # :297-339; we resolve it to the documented intent —
-                    # a buffered batch is never dropped. A process call
-                    # slower than idle_time no longer eats the queue.)
-                    try:
-                        payload, n_items = ch.get_nowait()
-                    except queue.Empty:
+                try:
+                    payload, n_items = ch.get(timeout=0.05)
+                except queue.Empty:
+                    if self._cancel.is_set() and ch.empty():
+                        return
+                    idle_for = time.monotonic() - last_data
+                    if received == taken and idle_for >= self.config.idle_time:
                         # idle timer fired (reference :334-337)
                         self._set_reason(CloseReason.IDLE_TIMEOUT)
                         self._cancel.set()
                         return
-                else:
-                    try:
-                        payload, n_items = ch.get(timeout=min(idle_left, 0.05))
-                    except queue.Empty:
-                        if self._cancel.is_set() and ch.empty():
-                            return
-                        continue
+                    continue
+                received += 1
                 now = time.monotonic()
                 # IdleDuration = inter-arrival gap (reference :306-310)
                 self.metrics.record_idle(now - last_data)
@@ -316,12 +303,13 @@ class StreamingPipeline:
     (the reference's ``ProcessFunc`` slot, async_data_pipeline.go:69-71)
     with:
 
-    - a ``StreamingQueryListener`` folding ``StreamingQueryProgress`` into
-      :class:`PipelineMetrics` (SURVEY.md §4 item 4);
-    - an idle watchdog thread that calls ``query.stop()`` when no progress
-      event has carried ``numInputRows > 0`` for ``idle_time`` seconds
-      (engine implementation of the reference idle timer,
-      async_data_pipeline.go:243/:313/:334-337);
+    - a wrapper whose own ``count()`` (with any ``observe`` aggregates
+      riding the same job) feeds :class:`PipelineMetrics` — there is no
+      listener bridge yet (ROADMAP.md direction 4);
+    - an idle watchdog thread that calls ``query.stop()`` once no
+      micro-batch has been in flight for ``idle_time`` seconds since the
+      last data-carrying one left (engine implementation of the reference
+      idle timer, async_data_pipeline.go:243/:313/:334-337);
     - sentinel/error handling in the foreachBatch wrapper
       (``StopPipeline`` → graceful stop + PROCESS_CANCEL; other
       exceptions → ``ProcessError`` + stop).
@@ -355,7 +343,10 @@ class StreamingPipeline:
         self._reason_lock = threading.Lock()
         self._errors: list[BaseException] = []
         self._stop_requested = threading.Event()
+        # The idle rule (module docstring): ``_foreach_batch`` holds
+        # ``_in_flight`` while it runs. Both guarded by _last_data_lock.
         self._last_data = time.monotonic()
+        self._in_flight = False
         self._last_data_lock = threading.Lock()
         self.query = None
 
@@ -364,50 +355,53 @@ class StreamingPipeline:
             if self._reason is CloseReason.NONE:
                 self._reason = reason
 
-    def _note_data(self) -> None:
-        with self._last_data_lock:
-            self._last_data = time.monotonic()
-
     def _foreach_batch(self, batch_df, epoch_id: int) -> None:
-        # The wrapper needs the batch's row count anyway (idle clock +
-        # ItemCount). When custom observe aggregates are configured they
-        # ride that same counting pass via df.observe — one job, one
-        # scan, rows + customs together.
-        if self._observe:
-            from asyncdatapipeline_spark.metrics import attach_observation
-
-            batch_df, obs = attach_observation(
-                batch_df, self._observe, f"epoch-{epoch_id}"
-            )
-            batch_df.count()  # matures the observation
-            vals = obs.get
-            n = int(vals["rows"])
-            if n > 0:
-                self.metrics.record_observed(
-                    {k: v for k, v in vals.items() if k != "rows"}
-                )
-        else:
-            n = batch_df.count()
-        if n > 0:
-            self._note_data()
-        t0 = time.monotonic()
+        with self._last_data_lock:
+            self._in_flight = True
+        n = 0
         try:
-            self._process(batch_df, epoch_id)
-        except StopPipeline:
-            self._set_reason(CloseReason.PROCESS_CANCEL)
-            self._stop_requested.set()
-            return
-        except Exception as exc:
-            self._errors.append(ProcessError(str(exc), cause=exc, epoch_id=epoch_id))
-            self._stop_requested.set()
-            return
-        if n > 0:
-            self.metrics.record_batch(n, time.monotonic() - t0)
+            # The wrapper needs the batch's row count anyway (idle clock +
+            # ItemCount). When custom observe aggregates are configured they
+            # ride that same counting pass via df.observe — one job, one
+            # scan, rows + customs together.
+            if self._observe:
+                from asyncdatapipeline_spark.metrics import attach_observation
+
+                batch_df, obs = attach_observation(
+                    batch_df, self._observe, f"epoch-{epoch_id}"
+                )
+                batch_df.count()  # matures the observation
+                vals = obs.get
+                n = int(vals["rows"])
+                if n > 0:
+                    self.metrics.record_observed(
+                        {k: v for k, v in vals.items() if k != "rows"}
+                    )
+            else:
+                n = batch_df.count()
+            t0 = time.monotonic()
+            try:
+                self._process(batch_df, epoch_id)
+            except StopPipeline:
+                self._set_reason(CloseReason.PROCESS_CANCEL)
+                self._stop_requested.set()
+                return
+            except Exception as exc:
+                self._errors.append(ProcessError(str(exc), cause=exc, epoch_id=epoch_id))
+                self._stop_requested.set()
+                return
+            if n > 0:
+                self.metrics.record_batch(n, time.monotonic() - t0)
+        finally:
+            with self._last_data_lock:
+                self._in_flight = False
+                if n > 0:
+                    self._last_data = time.monotonic()
 
     def run(self, deadline: float | None = None) -> tuple[CloseReason, list[BaseException]]:
         start = time.monotonic()
         self.metrics.reset()
-        self._note_data()
+        self._last_data = start  # no micro-batch can run before start()
 
         writer = (
             self.source_df.writeStream.outputMode("append")
@@ -416,8 +410,8 @@ class StreamingPipeline:
         )
         self.query = writer.start()
 
-        # Idle watchdog (SURVEY.md §4 item 1): counts only data-carrying
-        # progress; empty micro-batches do not reset the clock.
+        # Idle watchdog (SURVEY.md §4 item 1): reads 0 idle while a
+        # micro-batch is in flight; empty micro-batches do not reset it.
         hard_deadline = None if deadline is None else start + deadline
         try:
             while self.query.isActive:
@@ -425,7 +419,7 @@ class StreamingPipeline:
                     self.query.stop()
                     break
                 with self._last_data_lock:
-                    idle_for = time.monotonic() - self._last_data
+                    idle_for = 0.0 if self._in_flight else time.monotonic() - self._last_data
                 if idle_for > self.config.idle_time:
                     self._set_reason(CloseReason.IDLE_TIMEOUT)
                     self.metrics.record_idle(idle_for)

@@ -36,12 +36,6 @@ def test_pipeline_spark_batches(spark):
         # df is a real DataFrame: run an aggregation on it
         seen_rows.append(df.groupBy().sum("id").collect()[0][0])
 
-    # warm the session: a cold first createDataFrame/action can exceed
-    # the idle window, idling the pipeline out before the batch lands
-    # (that's correct "source blocked" semantics, but not what this test
-    # is about)
-    spark.createDataFrame([(0, "w")], "id long, value string").count()
-
     pipe = Pipeline(
         PipelineConfig(max_workers=2, idle_time=3.0, collect_timeout=5),
         collect,
@@ -86,6 +80,37 @@ def test_streaming_pipeline_idle_close(spark, stream_dir):
     m = pipe.metrics.current()
     assert m.item_count == 200
     assert m.batch_count >= 1
+
+
+def test_streaming_pipeline_slow_batch_is_not_idle(spark, tmp_path):
+    """A micro-batch whose process outlasts idle_time is in flight, not
+    idle: every file of the backlog is delivered before the idle close."""
+    path = str(tmp_path / "three_files")
+    for i in range(3):
+        spark.range(i * 100, (i + 1) * 100).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+    src = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+    epochs = []
+
+    def process(df, epoch):
+        time.sleep(1.5)
+        epochs.append(epoch)
+
+    pipe = StreamingPipeline(
+        spark, src, process, PipelineConfig(max_workers=2, idle_time=1)
+    )
+    reason, errors = pipe.run(deadline=60)
+    assert reason is CloseReason.IDLE_TIMEOUT
+    assert errors == []
+    assert len(epochs) == 3
+    m = pipe.metrics.current()
+    assert m.batch_count == 3
+    assert m.item_count == 300
 
 
 def test_streaming_pipeline_sentinel(spark, stream_dir):

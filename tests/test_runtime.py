@@ -9,6 +9,7 @@ wall-clock.
 
 from __future__ import annotations
 
+import sys
 import threading
 import time
 
@@ -83,6 +84,105 @@ def test_slow_process_does_not_drop_buffered_batches():
     assert errors == []
     assert [r["id"] for r in processed] == [1, 2, 3]
     assert pipe.export_metrics()["batch_count"] == 3
+
+
+class _SlowSpark:
+    """Spark-free stand-in whose createDataFrame outlasts the idle window."""
+
+    def __init__(self, delay=0.3, fail=None):
+        self.delay = delay
+        self.fail = fail
+
+    def createDataFrame(self, data, schema=None):
+        time.sleep(self.delay)
+        if self.fail is not None:
+            raise self.fail
+        return list(data)
+
+
+def _finite_collect(n_batches, rows):
+    batches = iter(
+        [[{"id": b * rows + i} for i in range(rows)] for b in range(n_batches)]
+    )
+
+    def collect(p):
+        b = next(batches, None)
+        if b is None:
+            time.sleep(0.05)  # source drained: only idleness remains
+        return b
+
+    return collect
+
+
+def test_slow_normalisation_is_not_idle():
+    """A batch being normalised (collect returned, createDataFrame still
+    running) is in flight, so idle_time shorter than createDataFrame must
+    not close the run before the batch reaches process."""
+    processed = []
+    pipe = Pipeline(
+        PipelineConfig(max_workers=4, idle_time=0.2, collect_timeout=2.0),
+        _finite_collect(5, 100),
+        lambda p, df: processed.extend(df),
+        spark=_SlowSpark(0.3),
+    )
+    reason, errors = pipe.run(deadline=10)
+    assert reason is CloseReason.IDLE_TIMEOUT
+    assert errors == []
+    assert len(processed) == 500
+    assert pipe.get_current_metrics().item_count == 500
+
+
+def test_normalisation_error_wrapped():
+    """A createDataFrame failure is a CollectError that stops the run; it
+    must neither vanish behind an idle close nor leave the batch in flight
+    forever."""
+    boom = TypeError("schema mismatch")
+    pipe = Pipeline(
+        PipelineConfig(max_workers=4, idle_time=0.2, collect_timeout=2.0),
+        _finite_collect(1, 10),
+        lambda p, df: None,
+        spark=_SlowSpark(0.0, fail=boom),
+    )
+    t0 = time.monotonic()
+    reason, errors = pipe.run(deadline=10)
+    assert time.monotonic() - t0 < 5
+    assert reason is CloseReason.NONE
+    assert len(errors) == 1
+    assert isinstance(errors[0], CollectError)
+    assert errors[0].cause is boom
+
+
+def test_idle_rule_under_thread_contention():
+    """More pipelines than cores, each normalising slower than its idle
+    window, with a short interpreter switch interval: the collector's
+    taken count and the processor's received count must still keep every
+    batch from being closed out as idle."""
+    n_pipes, n_batches, rows = 8, 6, 10
+    results = [None] * n_pipes
+
+    def one(i):
+        processed = []
+        pipe = Pipeline(
+            PipelineConfig(max_workers=2, idle_time=0.25, collect_timeout=5.0),
+            _finite_collect(n_batches, rows),
+            lambda p, df: processed.extend(df),
+            spark=_SlowSpark(0.3),
+        )
+        reason, errors = pipe.run(deadline=20)
+        results[i] = (reason, errors, len(processed))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=one, args=(i,)) for i in range(n_pipes)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert results == [(CloseReason.IDLE_TIMEOUT, [], n_batches * rows)] * n_pipes
 
 
 # -- collect error (reference :129-165) ----------------------------------
