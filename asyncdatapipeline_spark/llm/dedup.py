@@ -25,7 +25,7 @@ from asyncdatapipeline_spark.sources.tables import load_table
 
 
 @query(
-    "q_dedup_exact",
+    "q_dedup_exact", scan_repair=False,
     oracle="""
 SELECT
   md5(text) AS text_hash,
@@ -43,7 +43,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between shuffling hashes and shuffling the corpus.
     md5 is content-addressing here, not security.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash"))
         .agg(
@@ -2936,7 +2936,7 @@ _URL_TOP_K = 15
 
 
 @query(
-    "q_dedup_url",
+    "q_dedup_url", scan_repair=False,
     # The raw URLs are a deterministic fixture (case/slash/tracking-
     # param variants synthesized from doc fields); the OPERATOR under
     # test is the canonicalizer, which must recover the duplicate
@@ -3002,7 +3002,7 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle until the final grouped count), then one map-combinable
     reduce on the canonical key and a TakeOrderedAndProject top-{k}.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTPS://"),
         F.when(F.col("doc_id") % 2 == 0, F.upper("source")).otherwise(

@@ -264,7 +264,7 @@ _SPLIT_VALID_LT = 243
 
 
 @query(
-    "q_split_hash",
+    "q_split_hash", scan_repair=False,
     oracle=f"""
 SELECT doc_id,
        ('0x' || substr(md5(doc_id::VARCHAR), 1, 2))::UINTEGER AS bucket,
@@ -292,7 +292,7 @@ def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split column is written at ingest and downstream reads partition
     on it.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", *split_exprs())
 
 

@@ -19,7 +19,7 @@ _CTX_TOKENS = 512  # context-window token budget per pack
 
 
 @query(
-    "q_pack_sequences",
+    "q_pack_sequences", scan_repair=False,
     oracle=f"""
 WITH t AS (
   SELECT source, doc_id, len(string_split(text, ' ')) AS n_tok
@@ -59,7 +59,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-shard document order (packing semantics are per-shard by
     construction in a sharded corpus).
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
     w = (
         W.partitionBy("source")

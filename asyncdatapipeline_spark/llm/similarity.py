@@ -1587,7 +1587,7 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ml_nearest_centroid",
+    "q_ml_nearest_centroid", scan_repair=False,
     # The q_embed_outliers micro-integer device end-to-end: centroids
     # and every vector-to-centroid distance are EXACT BIGINT
     # arithmetic, the argmin is a lexicographic (d2, label) struct-min
@@ -1665,10 +1665,7 @@ def q_ml_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Confusion and accuracy are map-combinable integer reduces on the
     |labels|² frame.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "embeddings", parallelize=False)
+    e = load_table(spark, sf_dir, "embeddings")
     cells = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos0", "xf")
     ).select(
@@ -2991,7 +2988,7 @@ def q_embed_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_embed_drift",
+    "q_embed_drift", scan_repair=False,
     # Halves are deterministic (vec_id parity); per-half centroids ride
     # the IVF micro-grid device (floor(x*1e6) exact integer sums), the
     # per-dimension difference is the identical IEEE double both
@@ -3051,7 +3048,7 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid difference and the 12dp-snapped square live on the
     bounded (label, dim) frame; output is label-sized.
     """
-    e = load_table(spark, sf_dir, "embeddings", parallelize=False)
+    e = load_table(spark, sf_dir, "embeddings")
     x = e.select(
         "label",
         (F.col("vec_id") % 2).alias("half"),

@@ -3160,7 +3160,7 @@ def q_text_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_text_source_divergence",
+    "q_text_source_divergence", scan_repair=False,
     # The ln-ratio args are ratios of exact BIGINT cross products
     # (2*c1*n2 / (c1*n2 + c2*n1)); each ln rides the 9dp-round-then-
     # DECIMAL contract and multiplies an integer count (the keyness
@@ -3240,10 +3240,7 @@ def q_text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate guard: a single-source corpus has no "rest" and emits
     NULL divergences, not a division crash.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     w = d.select(
         "source", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -3410,7 +3407,7 @@ def q_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_text_lexical_diversity",
+    "q_text_lexical_diversity", scan_repair=False,
     # Token/type counts are exact integers; TTR family ratios are
     # single IEEE ops; the two lns ride the 9dp contract; per-doc TTRs
     # are 9dp-quantized into DECIMAL before the source-level mean.
@@ -3470,7 +3467,7 @@ def q_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the doc mean; a one-token source gets NULL Herdan (ln 1 = 0
     denominator), not a crash.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -4522,7 +4519,7 @@ _VC_SIZES = (100, 1000, 10000)
 
 
 @query(
-    "q_text_vocab_coverage",
+    "q_text_vocab_coverage", scan_repair=False,
     # Pure integer construction: word counts, a descending cumulative
     # count over (count DESC, word), and rank selections at
     # least(N, |vocab|) — the only float is the final share division.
@@ -4574,7 +4571,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from asyncdatapipeline_spark.operators._util import dist_cumsum
 
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     w = d.select(F.explode(F.split("text", " ")).alias("word")).filter(
         F.col("word") != ""
     )

@@ -857,7 +857,7 @@ def q_agg_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_agg_sketch_setops",
+    "q_agg_sketch_setops", scan_repair=False,
     # Sketch bytes/estimates are engine-specific (the q_agg_hll rule):
     # the oracle carries the exact set cardinalities plus Spark-side
     # booleans asserting each theta estimate stayed within tolerance.
@@ -902,10 +902,7 @@ def q_agg_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final algebra is a crossJoin of two 1-row frames (sanctioned
     O(1) pattern, q_join_theta rule).
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
 
     def segment(status: str, name: str) -> DataFrame:
         partials = (
@@ -979,7 +976,7 @@ def q_agg_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_agg_kll",
+    "q_agg_kll", scan_repair=False,
     # Sketch internals are engine-specific (the q_agg_hll /
     # q_agg_sketch_setops rule): the oracle carries the exact count and
     # exact quantiles, plus Spark-side booleans asserting the KLL
@@ -1015,7 +1012,7 @@ def q_agg_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     around the exact percentiles (KLL k=200 ⇒ ~1.7% rank error;
     the band is deliberately loose so the boolean is stable).
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.kll_sketch_agg_double("l_quantity").alias("sk")
     )
@@ -1324,7 +1321,7 @@ def q_agg_skewkurt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_agg_heavy",
+    "q_agg_heavy", scan_repair=False,
     # Sketch lists are engine-specific, so the oracle checks the EXACT
     # heavy-hitter numbers (tie-free: max count and sum-of-top-5 counts
     # are multiset-determined even when ties straddle the rank-5 cut)
@@ -1379,7 +1376,7 @@ def q_agg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     cells = e.groupBy("event_type", F.month("ts").alias("m")).agg(
         F.expr("approx_top_k_accumulate(user_id, 10000)").alias("st")
     )
@@ -3298,7 +3295,7 @@ def q_agg_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_agg_kendall",
+    "q_agg_kendall", scan_repair=False,
     # Concordant/discordant pair counts over the CONTINGENCY CELLS in
     # exact DECIMAL (pair products overflow BIGINT at petabyte row
     # counts); tau-b's tie terms from the marginals; one final double
@@ -3354,10 +3351,7 @@ def q_agg_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is data-independent — the canonical "aggregate first, then
     quadratic on the aggregate" device (q_ts_theilsen's pattern).
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     cells = (
         li.select(
             F.col("l_quantity").alias("x"), F.col("l_discount").alias("y")
@@ -6160,7 +6154,7 @@ def q_agg_ratio_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_agg_xtab_residuals",
+    "q_agg_xtab_residuals", scan_repair=False,
     # Everything derives from exact integer counts: expected counts,
     # shares, and the adjusted residual are the same IEEE expression
     # on identical doubles; the verdict compares that identical value.
@@ -6207,10 +6201,7 @@ def q_agg_xtab_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is closed-form on exact integers. Nothing downstream
     of the first reduce is data-sized.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     c = o.groupBy(
         F.col("o_orderpriority").alias("r"),
         F.col("o_orderstatus").alias("col"),

@@ -1313,7 +1313,7 @@ _WOE_ADJ = 0.5
 
 
 @query(
-    "q_feature_woe",
+    "q_feature_woe", scan_repair=False,
     # ln() determinism: the argument is a ratio of exact integer
     # counts (+0.5 adjustments) — both engines build the identical
     # double, then round(ln, 9) pins the transcendental to a shared
@@ -1365,7 +1365,7 @@ def q_feature_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_agg_entropy device) and IV terms are decimal-summed so the
     result is partitioning- and order-independent.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     c = o.groupBy(F.col("o_orderpriority").alias("bin")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(
@@ -1425,7 +1425,7 @@ def q_feature_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ml_odds_ratio",
+    "q_ml_odds_ratio", scan_repair=False,
     # Haldane-corrected cells are exact half-integers; the OR is pure
     # arithmetic on them (no exp/ln round trip — the CI is reported in
     # LOG odds, so the only transcendental is one 9dp-pinned ln and
@@ -1480,8 +1480,8 @@ def q_ml_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-combinable pass to four counters per segment; everything
     after is closed-form on the |segments| grid.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     j = o.join(
         F.broadcast(c.select("c_custkey", "c_mktsegment")),
         o.o_custkey == c.c_custkey,
@@ -1538,7 +1538,7 @@ def q_ml_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ml_isotonic",
+    "q_ml_isotonic", scan_repair=False,
     # Exact isotonic fit WITHOUT the sequential PAV recursion: on a
     # bounded bin grid the classic minimax identity
     # iso(k) = min_{j>=k} max_{i<=k} mean(y over bins i..j) is a pair
@@ -1598,10 +1598,7 @@ def q_ml_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two minimax reduces all live on bounded frames — no window,
     no sort, no iteration, no driver state.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     b = li.groupBy(
         F.col("l_quantity").cast("int").alias("bin")
     ).agg(

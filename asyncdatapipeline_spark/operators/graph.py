@@ -69,7 +69,7 @@ LIMIT {_PR_TOP_K}
 """
 
 
-@query("q_graph_pagerank", oracle=_pagerank_oracle())
+@query("q_graph_pagerank", scan_repair=False, oracle=_pagerank_oracle())
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank over the customer↔supplier trade graph
     (north star: iterative graph analytics): {iters} power-iteration
@@ -98,8 +98,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyed exchange exactly once and the repair's round-robin is a
     # pure extra barrier (the standard opt-out class). Interleaved
     # same-session A/B at sf0.1: ON 4.19 s vs OFF 3.67 s medians.
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     # Materialized ONCE (lazy localCheckpoint, inside this query's own
     # action — nothing persists across runs): the unrolled 3-round plan
     # embeds this join+distinct subtree ~8x (edges, deg, nodes, base,
@@ -1931,7 +1931,7 @@ q_graph_rich_club.__doc__ = q_graph_rich_club.__doc__.format(ks=_RC_KS)
 
 
 @query(
-    "q_graph_neighbor_degree",
+    "q_graph_neighbor_degree", scan_repair=False,
     # Pure integer device: degrees are counts, the per-class reduce
     # sums neighbor degrees as BIGINTs, and the one division happens
     # per bounded degree-class row on identical integers.
@@ -1972,8 +1972,8 @@ def q_graph_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized), and the final reduce is a bounded degree-class
     grid of exact integer sums — map-combinable end to end.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     pairs = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(

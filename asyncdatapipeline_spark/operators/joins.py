@@ -211,7 +211,7 @@ def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_join_asof",
+    "q_join_asof", scan_repair=False,
     oracle="""
 SELECT
   e.event_id,
@@ -235,11 +235,8 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Event timestamps are second-truncated on both sides so the ns-parquet
     vs µs-Spark precision difference cannot skew the comparison.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
+    o = load_table(spark, sf_dir, "orders")
     od = o.select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
@@ -420,7 +417,7 @@ def q_join_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_join_multiway",
+    "q_join_multiway", scan_repair=False,
     oracle=f"""
 SELECT n_name,
        {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')},
@@ -455,19 +452,14 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer⋈(order-line-supplier) join as an equi-key, not a
     post-filter.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
-    s = load_table(spark, sf_dir, "supplier", parallelize=False)
-    n = load_table(spark, sf_dir, "nation", parallelize=False)
-    r = load_table(
-        spark, sf_dir, "region", parallelize=False
-    ).filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nr = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     line_supp = li.join(s, li.l_suppkey == s.s_suppkey).join(
         F.broadcast(nr), F.col("s_nationkey") == nr.n_nationkey
@@ -1776,7 +1768,7 @@ _TRIGRAM_TAU = 0.5
 
 
 @query(
-    "q_join_trigram",
+    "q_join_trigram", scan_repair=False,
     # Same planted-dirty-side determinism as q_join_fuzzy; candidate
     # generation is capped to trigrams with document frequency <=
     # cap in BOTH engines (the stated contract), and the Jaccard is
@@ -1863,10 +1855,7 @@ def q_join_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets of the generated candidates; best-match is one
     WindowGroupLimit. All joins are equi joins on the gram key.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    p = load_table(spark, sf_dir, "part", parallelize=False)
+    p = load_table(spark, sf_dir, "part")
     base = p.select("p_partkey", F.col("p_name").alias("nm")).filter(
         F.length("nm") >= 3
     )

@@ -201,7 +201,10 @@ def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     tag = _corpus_tag(sf_dir)
     out = _LAYOUT_DIR / f"events_by_day_{tag}"
     if not (out / "_SUCCESS").exists():
-        e = load_table(spark, sf_dir, "events").withColumn(
+        # parallelize=True: the layout is shared, so its file count must
+        # not depend on whether a scan_repair=False query (q_join_dpp)
+        # or a repaired one builds it first
+        e = load_table(spark, sf_dir, "events", parallelize=True).withColumn(
             "event_date", F.to_date("ts")
         )
         e.write.mode("overwrite").partitionBy("event_date").parquet(str(out))
@@ -312,7 +315,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_join_dpp",
+    "q_join_dpp", scan_repair=False,
     oracle=f"""
 WITH per_day AS (
   SELECT CAST(ts AS DATE) AS event_date, COUNT(*) AS n
@@ -347,17 +350,14 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = ensure_partitioned_events(spark, sf_dir)
     schema = (
-        # Repair opt-out: the scan feeds a keyed exchange directly, so the
-        # repair's round-robin shuffle is a pure extra barrier here (r12
-        # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-        load_table(spark, sf_dir, "events", parallelize=False)
+        load_table(spark, sf_dir, "events")
         .withColumn("event_date", F.to_date("ts"))
         .schema
     )
     fact = spark.read.schema(schema).parquet(path)
 
     per_day = (
-        load_table(spark, sf_dir, "events", parallelize=False)
+        load_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("event_date"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -387,7 +387,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_join_bloom",
+    "q_join_bloom", scan_repair=False,
     oracle=f"""
 SELECT l.l_returnflag, COUNT(*) AS n_lines,
        {sql_dsum('l.l_extendedprice * (1 - l.l_discount)', 'revenue')}
@@ -416,16 +416,13 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bloom filter only prunes — results are conf-independent, so the
     oracle is the plain join.
     """
-    # parallelize=False: InjectRuntimeFilter pattern-matches the fact
-    # SCAN under the join; the repair's Repartition between them stops
-    # the bloom filter from landing (plan-audited `might_contain`)
-    # parallelize=False on BOTH sides: InjectRuntimeFilter
+    # scan_repair=False, for BOTH sides: InjectRuntimeFilter
     # pattern-matches a selective filter over the creation-side SCAN
     # and plants might_contain on the application-side SCAN; the
     # repair's Repartition in either subtree stops the rewrite
     # (plan-audited `might_contain`)
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    pt = load_table(spark, sf_dir, "part", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 25)
     )
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))

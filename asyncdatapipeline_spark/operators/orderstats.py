@@ -1430,7 +1430,7 @@ def q_agg_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_orders_repeat",
+    "q_orders_repeat", scan_repair=False,
     # Gaps are exact integer day differences; median/p90 are rank
     # selections (the q_agg_percentile_global convention) on the
     # |calendar-span|-bounded distinct-gap frame; mean is one IEEE
@@ -1493,10 +1493,7 @@ def q_orders_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort buffer and no single-partition window at any customer count.
     Zero-repeat corpora emit nothing (rate undefined), never 0/0.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     day = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long")
     w = W.partitionBy("o_custkey").orderBy("day", "o_orderkey")
     r = o.select("o_custkey", day.alias("day"), "o_orderkey").withColumn(
@@ -1552,7 +1549,7 @@ def q_orders_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_orders_leadtime",
+    "q_orders_leadtime", scan_repair=False,
     # Lead times are exact integer day differences; median/p90 are the
     # grouped rank-selection device (q_agg_median_exact convention)
     # on the calendar-bounded distinct-gap frame per priority; mean is
@@ -1604,11 +1601,8 @@ def q_orders_leadtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dist_cumsum(part_cols=[priority])`` → integer-rank selections —
     no per-group sort buffer at any fact size.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     sday = F.floor(F.unix_timestamp("l_shipdate") / 86400).cast("long")
     oday = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long")
     lt = li.join(o, li.l_orderkey == o.o_orderkey).select(

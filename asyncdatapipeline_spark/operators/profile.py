@@ -966,7 +966,7 @@ _EXPECTATION_TOL = {
 
 
 @query(
-    "q_dq_expectations",
+    "q_dq_expectations", scan_repair=False,
     # All counts are exact integers; the violation rate is one IEEE
     # division rounded to 6dp in both engines.
     oracle="""
@@ -1035,7 +1035,7 @@ def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate it against the same fixture horizon (all fixture dates
     are in the past), so the timeliness count is deterministically 0.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     s = o.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("o_totalprice").isNull().cast("long"))

@@ -144,7 +144,7 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_unpivot",
+    "q_unpivot", scan_repair=False,
     oracle="""
 SELECT l_orderkey, l_linenumber, measure, value FROM (
   SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
@@ -172,11 +172,11 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand reads the input once where the UNION ALL form scans it four
     times.
     """
-    # parallelize=False: the operator's contract IS the map-only plan
+    # scan_repair=False: the operator's contract IS the map-only plan
     # (scan → Expand, zero Exchange — plan-audited); the scan repair's
     # exchange would break that shape, and the pushed orderkey filter
     # leaves ~100 rows anyway
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") < 100
     )
     return li.unpivot(

@@ -82,16 +82,12 @@ ORDER BY s.s_name
 """
 
 
-def _views(
-    spark: SparkSession, sf_dir: str, *tables: str, parallelize: bool = True
-) -> None:
+def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     for t in tables:
-        load_table(
-            spark, sf_dir, t, parallelize=parallelize
-        ).createOrReplaceTempView(t)
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-@query("q_subquery_correlated", oracle=_Q17_SQL)
+@query("q_subquery_correlated", scan_repair=False, oracle=_Q17_SQL)
 def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery, TPC-H Q17 shape (SURVEY.md §4):
     lineitem rows whose quantity is below 20% of *their part's* average
@@ -111,11 +107,11 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the decorrelated per-partkey aggregates + the part join), so the
     # repair's round-robin shuffle is a pure extra barrier here (r12
     # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    _views(spark, sf_dir, "lineitem", "part", parallelize=False)
+    _views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_Q17_SQL)
 
 
-@query("q_exists_correlated", oracle=_Q21_SQL)
+@query("q_exists_correlated", scan_repair=False, oracle=_Q21_SQL)
 def q_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS, TPC-H Q21 shape (SURVEY.md §4):
     suppliers whose returned lines sit in finished orders that involve
@@ -132,7 +128,7 @@ def q_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anyway (semi/anti/join), so the repair's round-robin shuffle is a
     # pure extra barrier here (r12 whole-suite A/B, OPTIMIZATION_r12.md
     # "per-query opt-outs").
-    _views(spark, sf_dir, "supplier", "lineitem", "orders", parallelize=False)
+    _views(spark, sf_dir, "supplier", "lineitem", "orders")
     return spark.sql(_Q21_SQL)
 
 
@@ -236,7 +232,7 @@ _RECURSIVE_DUCK_SQL = _RECURSIVE_SPARK_SQL.replace(
 ).replace("AS STRING", "AS VARCHAR")
 
 
-@query("q_recursive_cte", oracle=_RECURSIVE_DUCK_SQL)
+@query("q_recursive_cte", scan_repair=False, oracle=_RECURSIVE_DUCK_SQL)
 def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (WITH RECURSIVE, new in Spark 4): a calendar spine
     grown day-by-day from the corpus min date, LEFT-joined to per-day
@@ -257,7 +253,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     date and a 1-row NULL-date spine over zero events, identically in
     both engines.
     """
-    _views(spark, sf_dir, "events", parallelize=False)
+    _views(spark, sf_dir, "events")
     return spark.sql(_RECURSIVE_SPARK_SQL)
 
 

@@ -302,7 +302,7 @@ def q_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_retention",
+    "q_retention", scan_repair=False,
     oracle="""
 WITH firsts AS (
   SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
@@ -342,10 +342,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second shuffle, and per-user state is one timestamp, so a bot key
     cannot skew anything (contrast q_funnel's sequence build).
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -3305,7 +3302,7 @@ def q_ts_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ts_decompose",
+    "q_ts_decompose", scan_repair=False,
     # Trend = centered 7-day MA from an EXACT integer window sum
     # (sum7/7.0 is one identical IEEE division); detrended values
     # round to 9dp and sum in DECIMAL for the per-dow seasonal means
@@ -3378,7 +3375,7 @@ def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a full 7-day window are excluded, not zero-padded (padding
     biases the trend at both ends).
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     e.createOrReplaceTempView("dec_events")
     return spark.sql(
         f"""
@@ -5086,7 +5083,7 @@ FROM u ORDER BY direction
 
 
 @query(
-    "q_ts_granger",
+    "q_ts_granger", scan_repair=False,
     # q_ts_crosscorr's exact-arithmetic discipline carried to the
     # DIRECTIONAL test: dense shared day spine, all 14 power sums
     # exact BIGINT, both OLS fits (restricted AR(1) vs unrestricted
@@ -5120,10 +5117,7 @@ def q_ts_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed forms (2×2 normal equations, no iteration) on ONE row of
     centered moments.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     e.createOrReplaceTempView("granger_events")
     return spark.sql(
         _GRANGER_SQL_BODY.format(
@@ -6393,7 +6387,7 @@ def q_events_fatigue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ts_mann_kendall",
+    "q_ts_mann_kendall", scan_repair=False,
     # S and the tie-corrected variance numerator are exact integers
     # (pairwise signs and tie-group cubics); only z is IEEE, the same
     # (S∓1)/σ continuity-corrected chain in both engines.
@@ -6461,7 +6455,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of whether the table is 10 GB or 100 TB); S, ties and
     the variance numerator are exact integers, z the one IEEE chain.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -7228,7 +7222,7 @@ def q_ts_rate_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ts_backtest",
+    "q_ts_backtest", scan_repair=False,
     # Counts and errors are exact integers on the dense day spine; MAE/
     # RMSE/WAPE are closed forms on integer sums; each MAPE term is
     # 9dp-rounded into DECIMAL before the sum (per-day ratio doubles
@@ -7297,7 +7291,7 @@ def q_ts_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     into DECIMAL before summing (order-proof). One closed-form row
     out.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -7368,7 +7362,7 @@ def q_ts_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_agg_overdispersion",
+    "q_agg_overdispersion", scan_repair=False,
     # Dense per-type day spine; all power sums exact BIGINT; index/
     # chi2/z are one shared IEEE chain from integers in both engines.
     oracle="""
@@ -7435,7 +7429,7 @@ def q_agg_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate guards: single-day spans and all-zero types emit NULL
     statistics, not a division crash.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
@@ -7651,7 +7645,7 @@ def q_ts_ljungbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_anomaly_seasonal",
+    "q_anomaly_seasonal", scan_repair=False,
     # Dense spine; per-DOW moments from exact BIGINT power sums; the z
     # and its ordering key are one shared IEEE chain; dow = epoch-day
     # mod 7 (integer, timezone-free).
@@ -7709,7 +7703,7 @@ def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared IEEE |z| key. Degenerate guards: strata with n ≤ 1 or zero
     variance contribute no anomalies (NULL-safe, no division crash).
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -9591,7 +9585,7 @@ _PE_LN6_9 = 1.791759469
 
 
 @query(
-    "q_ts_perm_entropy",
+    "q_ts_perm_entropy", scan_repair=False,
     # Daily revenues are exact decimal sums → the ordinal comparisons
     # (<=) are decided on identical doubles in both engines; the
     # pattern code is pure integer arithmetic; entropy rides the
@@ -9656,7 +9650,7 @@ def q_ts_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤6-row-per-group pattern grid. Exact decimal revenue sums make
     every ordinal comparison partitioning-independent.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     d = o.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -9708,7 +9702,7 @@ def q_ts_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ts_holt",
+    "q_ts_holt", scan_repair=False,
     # alpha = beta = 0.5: every smoothing multiply is an EXACT
     # IEEE halving, and both engines run the IDENTICAL left-to-right
     # fold over the identical exact-decimal daily revenues (Spark
@@ -9764,7 +9758,7 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as q_ts_sax's per-series arrays). Groups parallelize
     across the cluster; 10⁶ series = 10⁶ independent folds.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     d = o.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -9816,7 +9810,7 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ts_yule_walker",
+    "q_ts_yule_walker", scan_repair=False,
     # Integer-centering device (q_ts_periodogram): z = y·nd − Σy is an
     # exact integer per day, the lag products sum in DECIMAL(38,0)
     # exactly, and r1/r2/φ1/φ2 are the same IEEE expression on those
@@ -9886,7 +9880,7 @@ def q_ts_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free; lag windows ride bounded-vocab keys over the bounded
     day spine; the solve is closed-form per group.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.expr("cast(floor(unix_timestamp(ts) / 86400) as bigint)").alias(
@@ -10350,7 +10344,7 @@ q_events_absorbing.__doc__ = q_events_absorbing.__doc__.format(
 
 
 @query(
-    "q_orders_croston",
+    "q_orders_croston", scan_repair=False,
     # Two independent SCALAR folds (α = ½ exact halvings) over the
     # nonzero-demand event sequence — DuckDB's scalar list_reduce is
     # sound (the struct-lambda duplication bug q_ts_holt works around
@@ -10404,10 +10398,7 @@ def q_orders_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; the two folds run per group over calendar-bounded arrays
     (the q_ts_holt contract) — series parallelize across the cluster.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     d = o.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -10470,7 +10461,7 @@ _HAAR_LEVELS = (1, 2, 3)  # dyadic scales: 2, 4, 8 days
 
 
 @query(
-    "q_ts_haar_energy",
+    "q_ts_haar_energy", scan_repair=False,
     # Integer device end-to-end: the zero-filled day spine's counts are
     # BIGINT, each Haar detail numerator (left-half sum minus
     # right-half sum of a dyadic block) is an exact integer, its square
@@ -10536,10 +10527,7 @@ def q_ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     device, and the share window partitions by event_type over a
     bounded (type × 3)-row frame.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
@@ -10637,7 +10625,7 @@ _VR_K = 5  # aggregation horizon, days
 
 
 @query(
-    "q_ts_variance_ratio",
+    "q_ts_variance_ratio", scan_repair=False,
     # All-integer differences on the zero-filled spine: d1 and dk are
     # exact BIGINTs, their power sums ride decimal(19,0) products, and
     # VR is one IEEE expression on identical doubles both engines.
@@ -10713,10 +10701,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-decimal power sums are all spine-sized; the VR verdict
     is closed-form per group.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
@@ -10788,7 +10773,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_ts_cointegration",
+    "q_ts_cointegration", scan_repair=False,
     # OLS rides exact integer power sums (counts on the zero-filled
     # spine); the residual u = y - a - b*x is the identical IEEE
     # double per day both engines (a, b identical doubles from exact
@@ -10880,7 +10865,7 @@ def q_ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine-sized; both reductions are map-combinable and the final
     frame is ONE row.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
         .cast("long")
@@ -10979,7 +10964,7 @@ def q_ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_events_burstiness",
+    "q_events_burstiness", scan_repair=False,
     # Gaps are exact BIGINT microseconds (epoch_us both engines), the
     # power sums ride decimal(19,0) products, and mean/std/B/CV are
     # one IEEE expression on identical doubles. The lag window is
@@ -11033,7 +11018,7 @@ def q_events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combinable pass of exact integer/decimal power sums onto the
     bounded event_type grid.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     g = e.select(
@@ -11074,7 +11059,7 @@ _DTW_SCALE = 1_000_000  # integer micro-share grid
 
 
 @query(
-    "q_ts_dtw",
+    "q_ts_dtw", scan_repair=False,
     # Zero float surface: both profiles snap to integer micro-shares
     # (floor division), the local distance |a_i - b_j| is an integer,
     # and the banded DP propagates exact integer sums — the oracle
@@ -11170,7 +11155,7 @@ def q_ts_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (Arrow batch bridge)
 
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
@@ -11275,7 +11260,7 @@ q_ts_dtw.__doc__ = q_ts_dtw.__doc__.format(band=_DTW_BAND)
 
 
 @query(
-    "q_ts_holt_winters",
+    "q_ts_holt_winters", scan_repair=False,
     # The q_ts_holt contract extended with LIST seasonal state:
     # alpha = beta = gamma = 0.5 (exact halvings), both engines run
     # the IDENTICAL left-to-right recursion over identical integer
@@ -11352,10 +11337,7 @@ def q_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-fold carrying (l, b, 7-element seasonal list) — groups
     parallelize across the cluster, state is O(period) per series.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)

@@ -54,7 +54,7 @@ def _ts(lit: str):
 
 
 @query(
-    "q_tpch_q3",
+    "q_tpch_q3", scan_repair=False,
     oracle=f"""
 SELECT l.l_orderkey,
        round(CAST(SUM(CAST(({_REV}) AS DECIMAL(28,6))) AS DOUBLE), 6)
@@ -83,13 +83,13 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving both predicates, and the top-10 plans as
     TakeOrderedAndProject on the 6dp grid.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < _ts("1998-03-15 00:00:00")
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > _ts("1998-03-15 00:00:00")
     )
     return (
@@ -104,7 +104,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q6",
+    "q_tpch_q6", scan_repair=False,
     oracle=f"""
 SELECT {sql_dsum('l_extendedprice * l_discount', 'revenue')},
        CAST(count(*) AS BIGINT) AS n_lines
@@ -125,7 +125,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity), no join, ONE map-combinable decimal sum to a single
     row. If this query shuffles anything, the engine is broken.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= _ts("1997-01-01 00:00:00"))
@@ -142,7 +142,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q7",
+    "q_tpch_q7", scan_repair=False,
     oracle=f"""
 SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
        CAST(year(l.l_shipdate) AS INTEGER) AS l_year,
@@ -173,18 +173,18 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies after broadcast attachment (map-side), so the only shuffle
     is the final bounded (nation², year) reduce.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1998-01-01 00:00:00"))
     )
-    o = load_table(spark, sf_dir, "orders", parallelize=False).select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select(
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    s = load_table(spark, sf_dir, "supplier", parallelize=False).select(
+    s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey"
     )
-    n = load_table(spark, sf_dir, "nation", parallelize=False).select("n_nationkey", "n_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     ns = n.select(
         F.col("n_nationkey").alias("snk"), F.col("n_name").alias("supp_nation")
     )
@@ -216,7 +216,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q8",
+    "q_tpch_q8", scan_repair=False,
     oracle=f"""
 WITH base AS (
   SELECT CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
@@ -253,25 +253,22 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional exact-decimal sums on the bounded year grid — never
     two scans for numerator and denominator.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1998-01-01 00:00:00"))
     )
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select(
+    c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    n = load_table(spark, sf_dir, "nation", parallelize=False)
-    r = load_table(spark, sf_dir, "region", parallelize=False).filter(
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
-    s = load_table(spark, sf_dir, "supplier", parallelize=False).select(
+    s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey"
     )
-    p = load_table(spark, sf_dir, "part", parallelize=False).filter(
+    p = load_table(spark, sf_dir, "part").filter(
         F.col("p_type") == "PROMO"
     ).select("p_partkey")
     cust_asia = (
@@ -325,7 +322,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q10",
+    "q_tpch_q10", scan_repair=False,
     oracle=f"""
 SELECT c.c_custkey, c.c_name,
        round(CAST(SUM(CAST(({_REV}) AS DECIMAL(28,6))) AS DOUBLE), 6)
@@ -356,15 +353,15 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject on the 6dp revenue grid with a custkey
     tiebreak.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1997-04-01 00:00:00"))
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     )
-    n = load_table(spark, sf_dir, "nation", parallelize=False).select("n_nationkey", "n_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -436,7 +433,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q15",
+    "q_tpch_q15", scan_repair=False,
     oracle=f"""
 WITH rev AS (
   SELECT l_suppkey AS supplier_no,
@@ -463,11 +460,11 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelated scalar-subquery shape — equality on the 6dp grid so
     both engines keep identical tie sets), supplier dim broadcast.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1997-04-01 00:00:00"))
     )
-    s = load_table(spark, sf_dir, "supplier", parallelize=False).select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     rev = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.round(dsum(_rev_col(), "r"), 6).alias("total_revenue"))
@@ -484,7 +481,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q18",
+    "q_tpch_q18", scan_repair=False,
     oracle="""
 WITH big AS (
   SELECT l_orderkey FROM lineitem GROUP BY 1
@@ -514,12 +511,9 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving (tiny) key set joins back co-partitioned, customer
     attaches by broadcast, and the top-100 is TakeOrderedAndProject.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )
     big = (
@@ -548,7 +542,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q22",
+    "q_tpch_q22", scan_repair=False,
     oracle="""
 WITH avg_bal AS (
   SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(28,6))) AS DOUBLE)
@@ -585,14 +579,14 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-row probe), nation broadcasts, and the reduce lands on the
     bounded country grid.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
+    c = load_table(spark, sf_dir, "customer")
     o = (
-        load_table(spark, sf_dir, "orders", parallelize=False)
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= _ts("2000-01-01 00:00:00"))
         .select("o_custkey")
         .distinct()
     )
-    n = load_table(spark, sf_dir, "nation", parallelize=False).select("n_nationkey", "n_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     avg_bal = F.broadcast(
         c.filter(F.col("c_acctbal") > 0.0).agg(
             (
@@ -621,7 +615,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q4",
+    "q_tpch_q4", scan_repair=False,
     oracle="""
 SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
 FROM orders o
@@ -650,14 +644,11 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned pass, never a per-row probe; the reduce lands on
     the bounded priority grid.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1997-04-01 00:00:00"))
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate"
     )
     late = o.join(
@@ -677,7 +668,7 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q13",
+    "q_tpch_q13", scan_repair=False,
     oracle="""
 WITH c_orders AS (
   SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
@@ -708,8 +699,8 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     structural test: losing it means the outer join silently
     degraded.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select("c_custkey")
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_custkey", "o_orderkey")
     c_orders = (
@@ -725,7 +716,7 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q19",
+    "q_tpch_q19", scan_repair=False,
     oracle=f"""
 SELECT {sql_dsum(_REV, 'revenue')},
        CAST(count(*) AS BIGINT) AS n_lines
@@ -753,11 +744,8 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR across scans — pre-filtering the dim to the UNION of part-leg
     matches is the manual half it can't do.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    p = load_table(spark, sf_dir, "part", parallelize=False).select(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size"
     )
     part_leg = (
@@ -847,9 +835,7 @@ _LSHIP_SQL = """lineitem_ship AS (
 )"""
 
 
-def _partsupp(
-    spark: SparkSession, sf_dir: str, *, parallelize: bool = True
-) -> DataFrame:
+def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived partsupp (docstring above): 4 suppliers per part via the
     dbgen stride, availqty/supplycost as hash arithmetic on the keys.
 
@@ -867,7 +853,7 @@ def _partsupp(
         )
     )
     return (
-        load_table(spark, sf_dir, "part", parallelize=parallelize)
+        load_table(spark, sf_dir, "part")
         .select("p_partkey")
         .crossJoin(scnt)
         .select(
@@ -1059,7 +1045,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q5",
+    "q_tpch_q5", scan_repair=False,
     oracle=f"""
 SELECT n.n_name, round({{d28rev}}, 6) AS revenue
 FROM lineitem l
@@ -1087,22 +1073,15 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition (s_nationkey = c_nationkey) evaluates map-side after the
     broadcasts; final reduce is the bounded nation grid.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1997-01-01 00:00:00"))
     )
-    c = load_table(
-        spark, sf_dir, "customer", parallelize=False
-    ).select("c_custkey", "c_nationkey")
-    s = load_table(
-        spark, sf_dir, "supplier", parallelize=False
-    ).select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation", parallelize=False)
-    r = load_table(spark, sf_dir, "region", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
     return (
@@ -1122,7 +1101,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q9",
+    "q_tpch_q9", scan_repair=False,
     oracle=f"""
 WITH {_PS_SQL}
 SELECT n.n_name AS nation,
@@ -1160,25 +1139,16 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal revenue sum MINUS an exact BIGINT cents·qty sum,
     divided once per output row — never two scans.
     """
-    ps = _partsupp(spark, sf_dir, parallelize=False)
+    ps = _partsupp(spark, sf_dir)
     p = (
-        # Repair opt-out: the scan feeds a keyed exchange directly, so the
-        # repair's round-robin shuffle is a pure extra barrier here (r12
-        # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-        load_table(spark, sf_dir, "part", parallelize=False)
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
         .select("p_partkey")
     )
-    s = load_table(
-        spark, sf_dir, "supplier", parallelize=False
-    ).select("s_suppkey", "s_nationkey")
-    n = load_table(
-        spark, sf_dir, "nation", parallelize=False
-    ).select("n_nationkey", "n_name")
-    o = load_table(
-        spark, sf_dir, "orders", parallelize=False
-    ).select("o_orderkey", "o_orderdate")
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
     cost_qty = F.col("ps_cost_cents") * F.col("l_quantity").cast("bigint")
     # partsupp carries NO broadcast hint on purpose: it is dim-sized on
     # the fixture family (4·|part|), so Catalyst/AQE broadcasts it here
@@ -1394,7 +1364,7 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_tpch_q17",
+    "q_tpch_q17", scan_repair=False,
     oracle=f"""
 WITH pp AS (
   SELECT p_partkey FROM part
@@ -1432,15 +1402,12 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row reduce.
     """
     pp = (
-        # Repair opt-out: the scan feeds a keyed exchange directly, so the
-        # repair's round-robin shuffle is a pure extra barrier here (r12
-        # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-        load_table(spark, sf_dir, "part", parallelize=False)
+        load_table(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#3") & (F.col("p_type") == "SMALL"))
         .select("p_partkey")
     )
     lp = (
-        load_table(spark, sf_dir, "lineitem", parallelize=False)
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(pp), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_partkey", "l_quantity", "l_extendedprice")
     )

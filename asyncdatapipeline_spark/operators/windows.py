@@ -25,7 +25,7 @@ DEC = "decimal(28,6)"
 
 
 @query(
-    "q_win_rank",
+    "q_win_rank", scan_repair=False,
     oracle="""
 SELECT
   l_suppkey, l_orderkey, l_linenumber, l_quantity,
@@ -38,10 +38,7 @@ FROM lineitem
 )
 def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank per supplier (B27)."""
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     w_unique = W.partitionBy("l_suppkey").orderBy(
         F.col("l_quantity").desc(), "l_orderkey", "l_linenumber"
     )
@@ -1552,7 +1549,7 @@ q_orders_inventory.__doc__ = q_orders_inventory.__doc__.format(k=_INV_TOP_K)
 
 
 @query(
-    "q_skyline",
+    "q_skyline", scan_repair=False,
     # The oracle is the DEFINITION (anti-dominance NOT EXISTS over the
     # raw table); the engine never runs that O(n²) form — equality of
     # the two is exactly what the check proves. Prices are 2dp doubles
@@ -1586,7 +1583,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     min is dominated by that larger size (strict in size, ≤ in
     price). The n² definitional form appears ONLY as the oracle.
     """
-    p = load_table(spark, sf_dir, "part", parallelize=False)
+    p = load_table(spark, sf_dir, "part")
     spine = p.groupBy("p_size").agg(
         F.min("p_retailprice").alias("min_price")
     )

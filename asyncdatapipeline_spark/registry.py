@@ -12,10 +12,13 @@ Contract notes (README of /root/repo/__spark_entry__.py):
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from asyncdatapipeline_spark.sources.tables import no_scan_repair
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -28,15 +31,39 @@ class QueryDef:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     doc: str
+    scan_repair: bool = True
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query under ``name`` with an optional DuckDB oracle."""
+def query(
+    name: str, oracle: str | None = None, scan_repair: bool = True
+) -> Callable[[QueryFn], QueryFn]:
+    """Register a query under ``name`` with an optional DuckDB oracle.
+
+    ``scan_repair=False`` turns the scan-parallelism repair
+    (``sources/tables.py``) off for every fixture scan the query builds.
+    It is declared where the repair's round-robin shuffle is a pure
+    extra barrier — scans feeding a keyed exchange or light map work
+    (OPTIMIZATION_r12.md "per-query opt-outs", AB_REPAIR_r13.json) — or
+    would break the plan shape the operator exists to show (q_unpivot,
+    q_join_bloom). The decorator then returns a ``functools.wraps``
+    wrapper that runs the body inside ``no_scan_repair()``, so the
+    module attribute and the registry hold the same object.
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query registration: {name}")
-        _REGISTRY[name] = QueryDef(name, fn, oracle, (fn.__doc__ or "").strip())
+        if not scan_repair:
+            body = fn
+
+            @functools.wraps(body)
+            def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+                with no_scan_repair():
+                    return body(spark, sf_dir)
+
+        _REGISTRY[name] = QueryDef(
+            name, fn, oracle, (fn.__doc__ or "").strip(), scan_repair
+        )
         return fn
 
     return deco

@@ -15,6 +15,9 @@ same code reads one file or ten thousand.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,12 +44,12 @@ from pyspark.sql import DataFrame, SparkSession
 # Catalyst pushes filters and column pruning THROUGH Repartition (the
 # plan keeps PushedFilters/ReadSchema at the scan — verified on the
 # resident build), so the repair costs only the small shuffle.
-# Row-identity scans (input_file_name / _metadata) must opt out:
-# those columns evaluate above the exchange and would come back empty.
-_REPAIR_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_REPAIR_MAX_BYTES", str(256 << 20))
-)
+# A query opts out once, at registration (``@query(...,
+# scan_repair=False)``); load_table's ``parallelize`` overrides that for
+# one scan (see its docstring).
+_REPAIR_MAX_BYTES = 256 << 20
 _REPAIR_MIN_ROWS = 2_000  # below this, 1 task is the right plan
+_SCAN_REPAIR: ContextVar[bool] = ContextVar("scan_repair", default=True)
 _FOOTER_CACHE: dict[tuple[str, float], tuple[int, int, int]] = {}
 
 
@@ -84,9 +87,22 @@ def _repair_parallelism(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     # and pushdown pass through untouched; its determinism local sort
     # (sortBeforeRepartition, kept on) measured within noise of the
     # sort-free hash form — the exchange barrier, not the sort, is the
-    # repair's cost, and per-query opt-outs below handle the operators
-    # where that cost exceeds the parallelism it buys.
+    # repair's cost, and per-query opt-outs handle the operators where
+    # that cost exceeds the parallelism it buys.
     return df.repartition(par)
+
+
+@contextmanager
+def no_scan_repair() -> Iterator[None]:
+    """Turn the scan repair off for every ``load_table`` in this context
+    that does not pass ``parallelize`` itself (the registry wraps each
+    ``scan_repair=False`` query body in it)."""
+    token = _SCAN_REPAIR.set(False)
+    try:
+        yield
+    finally:
+        _SCAN_REPAIR.reset(token)
+
 
 TABLES = (
     "region",
@@ -133,14 +149,19 @@ def load_table(
     sf_dir: str,
     name: str,
     *,
-    parallelize: bool = True,
+    parallelize: bool | None = None,
 ) -> DataFrame:
     """Read one fixture table (parquet, schema from the footer).
 
-    ``parallelize=False`` opts out of the scan-parallelism repair (see
-    ``_repair_parallelism``) for callers that read row/file identity
-    columns (``input_file_name()``, ``_metadata``) — those evaluate
-    above the repair's exchange and would come back empty.
+    Whether the scan-parallelism repair (``_repair_parallelism``) runs
+    is the calling query's decision, declared once at its registration
+    (``@query(..., scan_repair=False)``) and read here from the
+    context. ``parallelize`` overrides it for one scan only, where the
+    choice belongs to that scan rather than to the query's speed: a
+    scan that reads row/file identity columns (``input_file_name()``,
+    ``_metadata``, which evaluate above the repair's exchange and would
+    come back empty), or a shared layout writer whose files must not
+    depend on which query builds them first.
 
     ``events.ts`` has shipped in two physical representations across
     fixture generations, and this loader normalizes both to a plain
@@ -159,6 +180,8 @@ def load_table(
     ensure_session_defaults(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
+    if parallelize is None:
+        parallelize = _SCAN_REPAIR.get()
     if parallelize:
         df = _repair_parallelism(spark, df, path)
     if name == "events":

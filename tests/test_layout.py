@@ -8,13 +8,17 @@ rows, so correctness alone can't catch the regression that matters at
 
 from __future__ import annotations
 
+import contextlib
+import pathlib
+
 from pyspark.sql import functions as F
 
+from asyncdatapipeline_spark.operators import layout
 from asyncdatapipeline_spark.operators.layout import (
     ensure_bucketed_tables,
     salted_join,
 )
-from asyncdatapipeline_spark.sources.tables import load_table
+from asyncdatapipeline_spark.sources.tables import load_table, no_scan_repair
 
 
 def _formatted_plan(spark, df) -> str:
@@ -211,3 +215,23 @@ def test_rollup_append_equals_rebuild(spark, sf_dir, tmp_path):
         .collect()
     }
     assert merged == direct
+
+
+def test_partitioned_events_layout_ignores_scan_repair_context(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The events-by-day layout is shared: whichever query reaches it
+    first builds it, q_join_dpp (``scan_repair=False``) among them, so
+    its files must not depend on the builder's scan-repair context.
+    Runs at sf0.01 because sf0.001 events (1,000 rows) sit below the
+    repair's 2,000-row floor, where both contexts agree trivially."""
+    sf01 = str(pathlib.Path(sf_dir).with_name("sf0.01"))
+
+    def n_files(layout_dir, ctx) -> int:
+        monkeypatch.setattr(layout, "_LAYOUT_DIR", layout_dir)
+        with ctx:
+            path = layout.ensure_partitioned_events(spark, sf01)
+        return len(list(pathlib.Path(path).rglob("*.parquet")))
+
+    repaired = n_files(tmp_path / "default", contextlib.nullcontext())
+    assert repaired == n_files(tmp_path / "opted_out", no_scan_repair())

@@ -67,45 +67,34 @@ def test_sql_pipe_plans_identically_to_ansi(spark, sf_dir):
     assert shape(pipe_df) == shape(ansi_df)
 
 
-# r12 scan-repair opt-outs: the whole-suite A/B (OPTIMIZATION_r12.md,
-# "per-query opt-outs") measured these queries SLOWER with the
-# single-row-group scan repair — their scans feed a keyed exchange
-# directly, so the repair's round-robin shuffle is a pure extra
-# barrier. Each passes parallelize=False at its load_table sites; this
-# gate pins that plan shape so a refactor can't silently re-enable the
-# repair (or a future repair change can't silently disable it for the
-# queries that DO want it).
-REPAIR_OPT_OUTS = [
-    # (q_agg_taildep left this list when its threshold build moved to
-    # the exact_pct_values sketch device — its first hop is now a
-    # CPU-heavy map-side aggregate, the repair-winner profile.)
-    "q_orders_leadtime", "q_ml_isotonic",
-    "q_agg_kendall", "q_orders_repeat", "q_agg_sketch_setops",
-    "q_tpch_q17", "q_win_rank", "q_tpch_q4", "q_tpch_q19",
-    "q_ml_nearest_centroid", "q_subquery_correlated", "q_tpch_q5",
-    "q_join_trigram", "q_tpch_q8", "q_exists_correlated",
-    "q_ts_variance_ratio", "q_join_asof", "q_retention",
-    "q_ts_haar_energy", "q_ts_granger", "q_agg_xtab_residuals",
-    "q_orders_croston", "q_tpch_q9", "q_join_dpp",
-    "q_text_source_divergence", "q_join_multiway",
-    "q_ts_holt_winters", "q_tpch_q18",
-    # r13 additions: the driver-regressed-44 re-verification
-    # (tools/ab_repair.py, interleaved same-session ON/OFF medians,
-    # clean ON-vs-ON control at 0.95-1.04) measured these 33 at
-    # off/on <= 0.90 — all are sub-2 s queries whose scans feed keyed
-    # exchanges or light map work where the repair's round-robin is a
-    # pure extra barrier. Artifact: AB_REPAIR_r13.json.
-    "q_text_lexical_diversity", "q_tpch_q13", "q_ml_odds_ratio",
-    "q_feature_woe", "q_agg_kll", "q_pack_sequences", "q_recursive_cte",
-    "q_tpch_q3", "q_tpch_q10", "q_agg_overdispersion",
-    "q_ts_yule_walker", "q_anomaly_seasonal", "q_tpch_q22", "q_ts_dtw",
-    "q_embed_drift", "q_dedup_url", "q_skyline", "q_ts_perm_entropy",
-    "q_ts_mann_kendall", "q_ts_holt", "q_ts_backtest", "q_tpch_q6",
-    "q_text_vocab_coverage", "q_ts_decompose", "q_dedup_exact",
-    "q_agg_heavy", "q_graph_neighbor_degree", "q_ts_cointegration",
-    "q_tpch_q15", "q_events_burstiness", "q_split_hash",
-    "q_dq_expectations", "q_tpch_q7",
-]
+def _repair_opt_outs() -> list[str]:
+    """The queries registered with ``scan_repair=False``."""
+    from asyncdatapipeline_spark import registry
+
+    return [n for n in registry.all_queries() if not registry.get(n).scan_repair]
+
+
+def test_scan_repair_opt_outs_are_their_module_attributes():
+    """``@query(..., scan_repair=False)`` returns the wrapper it
+    registers, so importing callers and the registry run one object,
+    and the wrapper reads as the body: same module (perfbench groups
+    its per-module metrics by ``fn.__module__``), name and docstring."""
+    import importlib
+
+    from asyncdatapipeline_spark import registry
+
+    names = _repair_opt_outs()
+    assert len(names) >= 64
+    for name in names:
+        fn = registry.get(name).fn
+        body = fn.__wrapped__
+        assert fn.__module__ == body.__module__ != registry.__name__, name
+        assert fn.__name__ == body.__name__, name
+        assert getattr(importlib.import_module(fn.__module__), fn.__name__) is fn
+        # some modules .format() the attribute's docstring after
+        # registration, which rewrites the wrapper's copy only
+        assert fn.__doc__ and body.__doc__, name
+        assert fn.__doc__.splitlines()[0] == body.__doc__.splitlines()[0], name
 
 
 def _physical(df) -> str:
@@ -115,11 +104,16 @@ def _physical(df) -> str:
 
 
 def test_repair_opt_outs_carry_no_roundrobin_exchange(spark, sf_dir):
+    """Every ``scan_repair=False`` query plans without the repair's
+    round-robin exchange, so neither a refactor nor a change to the
+    repair can silently re-enable it there."""
     from asyncdatapipeline_spark import registry
 
+    names = _repair_opt_outs()
+    assert len(names) >= 64
     bad = [
         name
-        for name in REPAIR_OPT_OUTS
+        for name in names
         if "RoundRobinPartitioning"
         in _physical(registry.get(name).fn(spark, sf_dir))
     ]
